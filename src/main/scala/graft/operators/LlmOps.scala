@@ -285,72 +285,57 @@ object LlmOps {
   /** [[minhashVerdictsFrom]] minus the final total-order sort, over a
     * pre-computed banding — the streaming ingest's per-batch probe,
     * where the append sink makes a per-batch sort pure overhead (the
-    * final readout re-sorts once). */
+    * final readout re-sorts once). Plan: one probe ⋈ candidates join
+    * and one per-rep aggregate, then the rep mins join their (text,
+    * lang) groups and every batch doc left-joins its group — three
+    * joins in all (PlanShapeSpec pins the count). */
   private[graft] def minhashVerdictsCore(batch: DataFrame,
       bGroups: DataFrame, bBanded: DataFrame, idx: DataFrame)
       : DataFrame = {
-    // r17 (guide §2.3 — explode the SMALL side): the neighbor-bucket
-    // fan-out moves from the INDEX (the corpus-sized side, growing
-    // every epoch) to the batch probe — |Δbucket| ≤ 1 is symmetric, so
-    // "probe explodes ±1 vs index ±1" matches the identical pair set
-    // (each qualifying pair still meets on exactly one key), but the
-    // band-key exchange now ships 1× the index and 3× the batch
-    // instead of 3× the index and 1× the batch.
-    val idxR = idx
-      .select(col("rep_id").as("ex_rep"), col("lang").as("lang2"),
-        col("n_chars").as("n_chars2"), col("bucket"),
-        col("band_sig").as("band_sig2"))
-    val bProbe = bBanded
+    // ONE candidate join per batch. Candidates are the index band rows
+    // ∪ the batch's own band rows, each at its own bucket and tagged by
+    // side; the probe is the batch band rows with the bucket exploded
+    // to ±1 (explode the SMALL side: |Δbucket| ≤ 1 is symmetric, so a
+    // ±1 probe against unexploded candidates matches the same pair set,
+    // each qualifying pair meeting on exactly one key, and the exchange
+    // ships 1× the index instead of 3×).
+    val cand = idx.withColumn("is_ex", lit(true))
+      .unionByName(bBanded.withColumn("is_ex", lit(false)))
+      .select(col("rep_id").as("cand"), col("lang").as("lang2"),
+        col("n_chars").as("n_chars2"), col("bucket").as("bucket2"),
+        col("band_sig").as("band_sig2"), col("is_ex"))
+    val probe = bBanded
       .withColumn("bucket",
         explode(array(col("bucket") - 1, col("bucket"), col("bucket") + 1)))
-    val exMin = bProbe.join(idxR,
+    // Candidate side stays at REP level, and so does the fold. Existing
+    // side: every index rep is below every batch id, so ex_min (the min
+    // over matched index reps) is every member's existing verdict — the
+    // min member of a group IS its rep (rep = min(doc_id)). Batch side:
+    // for a member n of group r, its batch candidates are S = pairs(r)
+    // ∪ {r} (the rep's match with itself supplies {r}: a rep shares all
+    // 32 bands, its lang and its n_chars with itself), and
+    // min{c ∈ S : c < n} is min(S) when min(S) < n and empty otherwise
+    // — so one per-rep min m answers every member.
+    val perRep = probe.join(cand,
         col("band_sig") === col("band_sig2") &&
           col("lang") === col("lang2") &&
-          bProbe("bucket") === idxR("bucket") &&
+          col("bucket") === col("bucket2") &&
           abs(col("n_chars") - col("n_chars2")) <= 10, "inner")
-      .groupBy(col("rep_id")).agg(min(col("ex_rep")).as("ex_min"))
-    // batch-vs-batch: the same banded shape restricted to the batch,
-    // member-expanded because earlier-batch admissibility (c < n) is
-    // id-dependent within a group
-    val bExp = bBanded
-      .withColumn("bucket",
-        explode(array(col("bucket") - 1, col("bucket"), col("bucket") + 1)))
-      .select(col("rep_id").as("rep_id2"), col("lang").as("lang2"),
-        col("n_chars").as("n_chars2"), col("bucket"),
-        col("band_sig").as("band_sig2"))
-    val bPairs = bBanded.join(bExp,
-        col("band_sig") === col("band_sig2") &&
-          col("lang") === col("lang2") &&
-          bBanded("bucket") === bExp("bucket") &&
-          col("rep_id") =!= col("rep_id2") &&
-          abs(col("n_chars") - col("n_chars2")) <= 10, "inner")
-      .select(col("rep_id"), col("rep_id2"))
-      .distinct()
-    val selfPairs = bGroups.select(col("rep_id"),
-      col("rep_id").as("rep_id2"))
-    val bMembers = batch
-      .join(bGroups.select(col("text"), col("lang"), col("rep_id")),
-        Seq("text", "lang"))
-      .select(col("rep_id"), col("doc_id"))
-    // Candidate side stays at REP level — no member expansion needed:
-    // a group's min member IS its rep (rep = min(doc_id)), so for any
-    // probe doc n the min admissible member of a matched group is its
-    // rep when rep < n, and no member at all otherwise (every other
-    // member exceeds the rep). Only the PROBE side expands to members
-    // (each doc needs its own verdict).
-    val nwMin = bPairs.unionAll(selfPairs)
-      .join(bMembers, Seq("rep_id"))
-      .filter(col("rep_id2") < col("doc_id"))
-      .groupBy(col("doc_id")).agg(min(col("rep_id2")).as("nw_min"))
-    val exPerDoc = bMembers.join(exMin, Seq("rep_id"))
-      .select(col("doc_id"), col("ex_min"))
-    batch.select(col("doc_id"), col("lang"))
-      .join(exPerDoc, Seq("doc_id"), "left")
-      .join(nwMin, Seq("doc_id"), "left")
+      .groupBy(col("rep_id"))
+      .agg(min(when(col("is_ex"), col("cand"))).as("ex_min"),
+        min(when(!col("is_ex"), col("cand"))).as("m"))
+    val perGroup = bGroups.select(col("text"), col("lang"), col("rep_id"))
+      .join(perRep, Seq("rep_id"))
+    // the left join keeps exactly one verdict row per batch doc
+    batch.select(col("doc_id"), col("lang"), col("text"))
+      .join(perGroup, Seq("text", "lang"), "left")
       .select(col("doc_id"), col("lang"),
-        when(col("ex_min").isNotNull || col("nw_min").isNotNull,
-          lit("band_dup")).otherwise(lit("kept")).as("stage"),
-        least(col("ex_min"), col("nw_min")).as("dup_of"))
+        least(col("ex_min"), when(col("m") < col("doc_id"), col("m")))
+          .as("dup_of"))
+      .select(col("doc_id"), col("lang"),
+        when(col("dup_of").isNotNull, lit("band_dup"))
+          .otherwise(lit("kept")).as("stage"),
+        col("dup_of"))
   }
 
   /** Advance the persisted sketch epoch by ONE id-ordered batch

@@ -1374,19 +1374,21 @@ object StreamingOps {
     * them in id order under `maxFilesPerTrigger=1`. Staged once per
     * cache key — harness plumbing standing in for a real ingest
     * directory, where arrival order IS id order by construction (ids
-    * are assigned at ingest time). */
+    * are assigned at ingest time). `src` is by-name: a cache hit builds
+    * no frame, so it pays no parquet schema-inference job. */
   private val stagedBatchDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def tableBatchDir(key: String, src: DataFrame, idCol: String,
+  private def tableBatchDir(key: String, src: => DataFrame, idCol: String,
       k: Int): String =
     stagedBatchDirs.computeIfAbsent(key, { _ =>
+      val df = src
       val dir = registeredScratchDir("graft_ingest_")
       // once-per-staging O(1) driver scalar (epoch split, not query
       // path); an EMPTY table stages k empty files (maxId = -1), so
       // the all-empty-stream readout paths stay exercisable
       val maxId = {
-        val r = src.agg(max(col(idCol))).head()
+        val r = df.agg(max(col(idCol))).head()
         if (r.isNullAt(0)) -1L else r.getLong(0)
       }
       (0 until k).foreach { i =>
@@ -1394,7 +1396,7 @@ object StreamingOps {
         val hi =
           if (i == k - 1) Long.MaxValue else (maxId + 1) * (i + 1) / k
         val slice = graft.Scratch.tempDir("graft_slice_")
-        src.filter(col(idCol) >= lo && col(idCol) < hi)
+        df.filter(col(idCol) >= lo && col(idCol) < hi)
           .coalesce(1).write.mode("overwrite").parquet(slice)
         val part = new java.io.File(slice).listFiles()
           .find(_.getName.endsWith(".parquet"))
@@ -1415,13 +1417,14 @@ object StreamingOps {
     * the watermark has advanced to slice 1's max — the arrival shape
     * the late-data side output exists for (an id-range-staged stream
     * can never be late: ts is monotone in id). */
-  private def tableBatchDirMod(key: String, src: DataFrame,
+  private def tableBatchDirMod(key: String, src: => DataFrame,
       idCol: String, k: Int): String =
     stagedBatchDirs.computeIfAbsent(key, { _ =>
+      val df = src
       val dir = registeredScratchDir("graft_ingest_")
       (0 until k).foreach { i =>
         val slice = graft.Scratch.tempDir("graft_slice_")
-        src.filter(pmod(col(idCol), lit(k.toLong)) === i)
+        df.filter(pmod(col(idCol), lit(k.toLong)) === i)
           .coalesce(1).write.mode("overwrite").parquet(slice)
         val part = new java.io.File(slice).listFiles()
           .find(_.getName.endsWith(".parquet"))
@@ -1628,10 +1631,11 @@ object StreamingOps {
       k: Int, root: String, ckpt: String,
       failBeforeEpoch: Int = Int.MaxValue): (DataFrame, Int) = {
     val srcDir = documentsBatchDir(s, d, k)
-    val docSchema = documents(s, d)
+    // one documents frame (one schema-inference job) for every schema
+    val docs = documents(s, d)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-      .schema
-    val emptyDocs = documents(s, d).filter(lit(false))
+    val docSchema = docs.schema
+    val emptyDocs = docs.filter(lit(false))
     val idxSchema = graft.operators.LlmOps
       .minhashBandIndex(emptyDocs).schema
     val verdictSchema = {
@@ -3603,14 +3607,14 @@ object StreamingOps {
       k: Int, root: String, ckpt: String,
       failBeforeEpoch: Int = Int.MaxValue): (DataFrame, Int) = {
     val srcDir = documentsBatchDir(s, d, k)
-    val docSchema = documents(s, d)
+    val docs = documents(s, d)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-      .schema
+    val docSchema = docs.schema
     // schema-only uses: survivorIndex is lazy selects (free); the state
     // schema is written out by hand because keepBestOf's CONSTRUCTION
     // runs the pointer-jump driver loop
     val survSchema = graft.operators.LlmOps
-      .survivorIndex(documents(s, d).filter(lit(false))).schema
+      .survivorIndex(docs.filter(lit(false))).schema
     val stateSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),

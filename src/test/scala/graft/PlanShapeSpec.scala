@@ -583,6 +583,25 @@ class PlanShapeSpec extends GraftSpec {
       "no staged band-index scan found in the plan")
   }
 
+  test("the MinHash verdict core is one candidate join plus the per-doc " +
+      "readout: no batch-pair self-join") {
+    // The rep-level fold (LlmOps.minhashVerdictsCore) meets the ±1
+    // probe with index ∪ batch band rows ONCE, joins the per-rep mins
+    // to their (text, lang) groups, and left-joins every batch doc to
+    // its group. The plan it replaced had 8 joins (a separate index
+    // probe, a batch band self-join, member expansion on both sides and
+    // two readout left joins); a 4th join here means one came back.
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val thr = operators.LlmOps.epochThreshold(spark, sf)
+    val idx = operators.LlmOps.minhashBandIndex(
+      Tables.documents(spark, sf).filter(col("doc_id") < thr))
+    val plan = operators.LlmOps.minhashLshPersistedFrom(spark, sf, thr, idx)
+      .queryExecution.optimizedPlan
+    val joins = plan.collect { case j: Join => j.joinType.sql }
+    assert(joins.sorted == Seq("INNER", "INNER", "LEFT OUTER"),
+      s"expected 3 joins (2 inner, 1 left outer), got $joins:\n$plan")
+  }
+
   test("no registered op carries an optimizer-inferred filter that " +
       "re-evaluates a heavy generator input (InferFiltersFromGenerate)") {
     // Round-9 found llm_decontaminate 66s at 16x replicas because

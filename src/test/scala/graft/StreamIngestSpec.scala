@@ -161,6 +161,39 @@ class StreamIngestSpec extends GraftSpec {
       "resumed chain != one-shot chain")
   }
 
+  test("stream_minhash_ingest replayed epoch: tampering the " +
+      "checkpoint's last commit replays the epoch against its keyed " +
+      "index version, re-appending identical verdicts") {
+    val k = 4
+    val (root, ckpt) = freshRoot()
+    val (first, n1) =
+      StreamingOps.minhashIngestRunAt(spark, sf, k, root, ckpt)
+    assert(n1 == k)
+    val firstRows = first.collect().toSeq
+    // simulate a crash AFTER epoch k's verdict append and idx/v(k)
+    // write but BEFORE the checkpoint commit: drop the last commit
+    // marker (and its .crc sibling, which a real crash loses too),
+    // forcing Spark to replay batch k-1 — it must re-read idx/v(k-1),
+    // not its own already-written successor
+    val lastCommit = new java.io.File(s"$ckpt/commits/${k - 1}")
+    assert(lastCommit.isFile, s"expected commit marker $lastCommit")
+    assert(lastCommit.delete())
+    new java.io.File(s"$ckpt/commits/.${k - 1}.crc").delete()
+    assert(StreamingOps.committedBatches(ckpt) == k - 1)
+    val (replayed, n2) =
+      StreamingOps.minhashIngestRunAt(spark, sf, k, root, ckpt)
+    assert(n2 == k)
+    assert(StreamingOps.committedBatches(ckpt) == k,
+      "the replayed epoch should re-commit")
+    val replayedRows = replayed.collect().toSeq
+    assert(!replayedRows.exists(r => !r.isNullAt(3) &&
+        r.getLong(0) == r.getLong(3)),
+      "a replayed doc matched its own band rows (self band_dup)")
+    assert(replayedRows == firstRows,
+      "replayed epoch changed the final verdicts — replay is not " +
+        "idempotent through the keyed index version")
+  }
+
   test("stream_keep_best_ingest kill-and-resume: the batchId-keyed " +
       "versioned state resumes to the from-scratch keep-best state") {
     val k = 4

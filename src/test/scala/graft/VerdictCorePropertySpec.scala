@@ -6,10 +6,16 @@ import graft.operators.{LlmOps, TrainingDataOps}
 
 /** Property pins for the per-batch verdict cores the ingest family
   * shares — randomized dup-heavy corpora against brute-force truth.
-  * These exist to protect the round-10 rep-level-candidate theorem
-  * ("a group's min member IS its rep, so the candidate side never
-  * needs member expansion"): any future edit that breaks the fold
-  * fails here against an implementation-free oracle. */
+  * These exist to protect two theorems the MinHash core rests on:
+  *  - rep-level candidates (round 10): a group's min member IS its
+  *    rep, so the candidate side never needs member expansion;
+  *  - the rep-level fold: for a member n of batch group r, the batch
+  *    candidates are S = pairs(r) ∪ {r} (the rep matches itself), and
+  *    min{c ∈ S : c < n} is min(S) when min(S) < n and empty otherwise,
+  *    so one per-rep min over a single candidate join answers every
+  *    member.
+  * Any future edit that breaks either fold fails here against an
+  * implementation-free oracle. */
 class VerdictCorePropertySpec extends GraftSpec {
 
   test("minhashVerdictsFrom == brute-force min-earlier band-pair truth " +
@@ -28,14 +34,6 @@ class VerdictCorePropertySpec extends GraftSpec {
         (i.toLong, lang, t.length.toLong, t)
       }
       val df = rows.toDF("doc_id", "lang", "n_chars", "text")
-      val thr = 30L
-      val idx = LlmOps.minhashBandIndex(df.filter($"doc_id" < thr))
-      val got = LlmOps
-        .minhashVerdictsFrom(df.filter($"doc_id" >= thr), idx)
-        .collect().map(r => r.getLong(0) ->
-          (r.getString(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))
-        .toMap
-
       // implementation-free truth: bands are a pure function of the
       // text's distinct tokens; admissibility = same lang, |Δn_chars|
       // ≤ 10, ≥ 1 shared band signature, candidate id < probe id
@@ -44,16 +42,27 @@ class VerdictCorePropertySpec extends GraftSpec {
           .bandSignatures(graft.functions.MinHash.sketch(
             t.split(" ").distinct.toSeq)).toSet
       }.toMap
-      rows.filter(_._1 >= thr).foreach { case (n, lang, nc, _) =>
-        val admissible = rows.filter { case (c, cl, cnc, _) =>
-          c < n && cl == lang && math.abs(cnc - nc) <= 10 &&
-            bands(c).intersect(bands(n)).nonEmpty
-        }.map(_._1)
-        val expected =
-          if (admissible.isEmpty) ("kept", None)
-          else ("band_dup", Some(admissible.min))
-        assert(got(n) == expected,
-          s"trial $trial doc $n: got ${got(n)} expected $expected")
+      // 0: empty index (batch side only); 60: empty batch
+      Seq(0L, 30L, 60L).foreach { thr =>
+        val idx = LlmOps.minhashBandIndex(df.filter($"doc_id" < thr))
+        val got = LlmOps
+          .minhashVerdictsFrom(df.filter($"doc_id" >= thr), idx)
+          .collect().map(r => r.getLong(0) ->
+            (r.getString(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))
+          .toMap
+        assert(got.keySet == rows.map(_._1).filter(_ >= thr).toSet,
+          s"trial $trial thr $thr: not one verdict per batch doc")
+        rows.filter(_._1 >= thr).foreach { case (n, lang, nc, _) =>
+          val admissible = rows.filter { case (c, cl, cnc, _) =>
+            c < n && cl == lang && math.abs(cnc - nc) <= 10 &&
+              bands(c).intersect(bands(n)).nonEmpty
+          }.map(_._1)
+          val expected =
+            if (admissible.isEmpty) ("kept", None)
+            else ("band_dup", Some(admissible.min))
+          assert(got(n) == expected,
+            s"trial $trial thr $thr doc $n: got ${got(n)} expected $expected")
+        }
       }
     }
   }
